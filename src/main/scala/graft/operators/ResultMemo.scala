@@ -1,5 +1,6 @@
 package graft.operators
 
+import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Materialized-result memo keyed by (session, name, sf dir): queries that
@@ -10,7 +11,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * pays the build; totals stay honest. */
 object ResultMemo {
 
-  @volatile private var cache: Map[(Int, String, String), DataFrame] = Map.empty
+  /** One lazily built checkpoint per key. The lazy val initializes under
+    * the cell's own monitor, so racing requests for one key build it once
+    * while independent keys — including the nested requests a build makes
+    * for its inputs (s03 asks for s01, s02, s04) — never wait on each
+    * other. A build that throws leaves the cell unbuilt for a retry. */
+  private final class Cell(build: () => DataFrame) {
+    lazy val df: DataFrame = build().localCheckpoint()
+  }
+
+  /** Keyed by the session OBJECT: the cached frame already references its
+    * session, and `System.identityHashCode` is not unique across live
+    * sessions. */
+  private val cache =
+    new ConcurrentHashMap[(SparkSession, String, String), Cell]()
 
   private val bypassFlag = new ThreadLocal[Boolean] {
     override def initialValue: Boolean = false
@@ -27,12 +41,7 @@ object ResultMemo {
   def materialized(name: String, s: SparkSession, d: String)(
       build: => DataFrame): DataFrame = {
     if (bypassFlag.get) return build
-    val key = (System.identityHashCode(s), name, d)
-    cache.getOrElse(key, {
-      val df = build.localCheckpoint()
-      synchronized { cache += (key -> df) }
-      df
-    })
+    cache.computeIfAbsent((s, name, d), _ => new Cell(() => build)).df
   }
 
   /** Eager localCheckpoint UNLESS running under [[bypass]] — for shared
@@ -46,8 +55,6 @@ object ResultMemo {
     * the next pass must re-execute real plans rather than read pass 1's
     * checkpoints. The orphaned checkpoint blocks are reclaimed by the
     * ContextCleaner once the dropped DataFrames are GC'd. */
-  def clearSession(s: SparkSession): Unit = synchronized {
-    val id = System.identityHashCode(s)
-    cache = cache.filterNot(_._1._1 == id)
-  }
+  def clearSession(s: SparkSession): Unit =
+    cache.keySet.removeIf(_._1 eq s)
 }

@@ -640,6 +640,8 @@ object Streams {
         "tok_start", "tok_end")
   }
 
+  private val confLock = new Object
+
   /** Drive a finite streaming aggregation into an in-memory table and return
     * its final contents (test/demo harness: AvailableNow over the parquet
     * files, complete output mode). */
@@ -656,7 +658,6 @@ object Streams {
     // session's 32 batch partitions cost ~4× the snapshot I/O these small
     // bounded gates need, so set it for the query and restore after.
     val spark = agg.sparkSession
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
     // SPARK_GRAFT_STATE_PARTS overrides for A/B experiments (ConfExperiment).
     // Two recognized shapes, everything else FAILS FAST (ADVICE r13: a
     // typo'd value that silently fell back to the default made an A/B
@@ -675,7 +676,6 @@ object Streams {
             "silently-defaulted config")
         if (items.length == 1) items.head.toInt else statePartitions
     }
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
     // AvailableNow appends a final NO-DATA micro-batch after the data
     // batches: it advances the watermark and runs state eviction/final
     // emission. Stateful APPEND-mode aggregations need it to emit closed
@@ -686,21 +686,31 @@ object Streams {
     // removal + commit for ZERO output rows). Callers whose semantics
     // can't be affected (inner joins) pass noDataBatch = false; the
     // oracle gate would catch any emission loss.
+    //
+    // start() clones the session, conf included, so the overrides need only
+    // hold across start(). The lock keeps concurrent callers' set/restore
+    // pairs from interleaving: unguarded, one caller could save another's
+    // override as its "previous" value and leave it on the session for
+    // every later query.
     val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevNoData = spark.conf.get(noDataKey)
-    if (!noDataBatch) spark.conf.set(noDataKey, "false")
-    try {
-      val q = agg.writeStream
-        .outputMode(mode)
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      spark.conf.set(noDataKey, prevNoData)
+    val q = confLock.synchronized {
+      val prev = spark.conf.get("spark.sql.shuffle.partitions")
+      val prevNoData = spark.conf.get(noDataKey)
+      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+      if (!noDataBatch) spark.conf.set(noDataKey, "false")
+      try {
+        agg.writeStream
+          .outputMode(mode)
+          .format("memory")
+          .queryName(name)
+          .trigger(Trigger.AvailableNow())
+          .start()
+      } finally {
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        spark.conf.set(noDataKey, prevNoData)
+      }
     }
+    q.awaitTermination()
     agg.sparkSession.table(name)
   }
 }

@@ -4,8 +4,9 @@ import graft._
 
 /** Generic per-query profiler: runs any SparkEntry query N times at an sf
   * dir and prints per-run wall-clock plus per-job and slow-stage timing —
-  * the tool that found d11's interpreted-HOF cost (see ProfileD11 for the
-  * stage-by-stage variant of that investigation).
+  * the tool that found d11's interpreted-HOF cost (the scan-side HOF ban
+  * that followed is recorded in SCALE.md "Round-13: HofBanSpec and the
+  * three filter-HOF finds").
   *
   * Usage: runMain graft.tools.ProfileQuery <query> [sfDir] [runs]
   */

@@ -3,11 +3,13 @@ package graft.functions
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 
-/** Parity pin for the bounded k-min-distinct aggregate (KmvTopKAgg, the r14
-  * "agg" KMV sketch variant) against the exact distinct + rank-window form
-  * it replaces ("window", the r13 form) — the same variant-parity discipline
-  * D12Ab/check and TokenCountKernelSpec apply: any divergence between the
-  * two buildable variants is a red spec, not a bench footnote. */
+/** Parity pin for the bounded k-min-distinct aggregate (KmvTopKAgg, the
+  * KMV sketch behind q45/q46) against the exact distinct + rank-window form
+  * it replaced, rebuilt here from plain Spark ops as the spec truth (the
+  * A/B that retired that form: SCALE.md "the KMV sketch rebuilt as a
+  * bounded aggregate"). Same discipline as TokenCountKernelSpec: any
+  * divergence from the reference form is a red spec, not a bench
+  * footnote. */
 class KmvTopKAggSpec extends SparkTestBase {
 
   private val K = 64

@@ -55,6 +55,31 @@ class StreamsSpec extends SparkTestBase {
     assert(got.toSeq == want.toSeq)
   }
 
+  test("overlapping runToMemory calls leave the session conf as they found it") {
+    // each call overrides shuffle partitions, and with noDataBatch = false
+    // the no-data-batch flag, around its start: interleaved set/restore
+    // pairs would leave one caller's override on the shared session
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.noDataMicroBatches.enabled")
+    val before = keys.map(k => spark.conf.get(k))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    val counts = try {
+      val runs = (0 until 8).map { i =>
+        Future {
+          Streams.runToMemory(
+            Streams.tumblingCounts(Streams.eventsStream(spark, dir)),
+            s"t_conf_$i", noDataBatch = i % 2 == 0).count()
+        }
+      }
+      Await.result(Future.sequence(runs), 5.minutes)
+    } finally pool.shutdown()
+    assert(counts.distinct.size == 1, s"runs disagree: $counts")
+    assert(keys.map(k => spark.conf.get(k)) == before)
+  }
+
   test("eventsStream adapts its pinned ts schema to the file encoding") {
     // nanos-as-long and native-micros fixture files must stream to the SAME
     // windows — a misread encoding collapses timestamps 1000× silently.
@@ -260,7 +285,7 @@ class StreamsSpec extends SparkTestBase {
       while (System.nanoTime() < deadline &&
           !Option(q.lastProgress).exists(p =>
             Option(p.eventTime.get("watermark"))
-              .exists(_ > "1970-01-01T00:00:01")))
+              .exists(w => java.time.Instant.parse(w).toEpochMilli > 1000L)))
         Thread.sleep(50L)
       // batch 2: minute 3 is far below watermark 50 -> evicted; minute 55
       // is on time -> its window updates
