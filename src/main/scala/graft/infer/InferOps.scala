@@ -1,11 +1,13 @@
 package graft.infer
 
 import graft.functions.TextFunctions
+import graft.operators.ResultMemo
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.util.LongAccumulator
 
-/** Bridges [[InferenceClient]] into DataFrame plans.
+/** Bridges [[InferenceClient]] into DataFrame plans — the engine's one
+  * inference edge.
   *
   * `mapPartitions` with explicit batching (not a per-row UDF): one client per
   * partition-task, `batchSize` prompts per transport call — the Spark
@@ -35,7 +37,17 @@ object InferOps {
     }
   }
 
-  /** Append `outCol` = client.complete(row[promptCol]) to every row. */
+  /** Append `outCol` = client.complete(row[promptCol]) to every row.
+    *
+    * The model is called once per row. The result is a LAZY local
+    * checkpoint: the first action computes each partition and caches it,
+    * and every later action (an audit write, a count, a second consumer)
+    * reads the cached rows instead of calling the model again — the model
+    * is nondeterministic and costs money, and the metrics count each call
+    * once. Lazy, so it adds no job of its own. Callers therefore put no
+    * checkpoint of their own on top of the result. Under
+    * [[ResultMemo.bypass]] the raw `mapPartitions` dataflow is returned so
+    * plan tooling still sees what runs below the edge. */
   def complete(
       df: DataFrame,
       promptCol: String,
@@ -47,7 +59,7 @@ object InferOps {
     val promptIdx = schema.fieldIndex(promptCol)
     val outSchema = StructType(schema.fields :+ StructField(outCol, StringType))
     val enc       = Encoders.row(outSchema)
-    df.mapPartitions { it =>
+    ResultMemo.lazyCheckpointed(df.mapPartitions { it =>
       it.grouped(batchSize).flatMap { batch =>
         val prompts = batch.map(_.getString(promptIdx))
         val replies = client.completeBatch(prompts)
@@ -58,25 +70,6 @@ object InferOps {
         }
         batch.lazyZip(replies).map((r, o) => Row.fromSeq(r.toSeq :+ o))
       }
-    }(enc)
-  }
-
-  /** Register `client.complete` as the non-deterministic SQL UDF
-    * `graft_infer` — the Catalyst-visible inference edge that
-    * [[graft.plans.PushFilterBelowInference]] optimizes around. */
-  def registerUdf(
-      spark: SparkSession,
-      client: InferenceClient,
-      metrics: Option[TokenMetrics] = None): Unit = {
-    val f = org.apache.spark.sql.functions.udf { (p: String) =>
-      val reply = client.complete(p)
-      metrics.foreach { m =>
-        m.calls.add(1L)
-        m.promptTokens.add(TextFunctions.estimateTokens(p).toLong)
-        m.completionTokens.add(TextFunctions.estimateTokens(reply).toLong)
-      }
-      reply
-    }.asNondeterministic()
-    spark.udf.register("graft_infer", f)
+    }(enc))
   }
 }

@@ -51,6 +51,12 @@ object ResultMemo {
   def checkpointed(df: DataFrame): DataFrame =
     if (bypassFlag.get) df else df.localCheckpoint()
 
+  /** Lazy twin of [[checkpointed]]: the first action over the frame
+    * materializes and caches it, so it costs no job of its own
+    * (`InferOps.complete`'s materialize-once). Raw under [[bypass]]. */
+  def lazyCheckpointed(df: DataFrame): DataFrame =
+    if (bypassFlag.get) df else df.localCheckpoint(false)
+
   /** Drop every memo belonging to `s` — for a bench pass boundary, where
     * the next pass must re-execute real plans rather than read pass 1's
     * checkpoints. The orphaned checkpoint blocks are reclaimed by the

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.functions.TextFunctions.TokenRatio
 import graft.infer.{InferOps, InferenceClient, MockInference}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -41,7 +42,10 @@ object V1Pipeline {
     val spark = docs.sparkSession
     registerChunker(spark, cfg.chunkBudget, cfg.chunkOverlap)
     // S4: per-stage input/output audit log (cf. LLMxMapReduce_V1/
-    // utils.py:30-46) — side-output JSONL per stage when enabled
+    // utils.py:30-46) — side-output JSONL per stage when enabled. A plain
+    // side write: InferOps.complete caches the rows its first action
+    // computes, so the audit files and the answer come from the same model
+    // replies, each computed once.
     def audit(stage: String, df: DataFrame): DataFrame = {
       auditDir.foreach(dir =>
         df.write.mode("overwrite").json(s"$dir/$stage"))
@@ -72,7 +76,7 @@ object V1Pipeline {
     // lineage truncation (IterativeStage).
     def oversized(df: DataFrame): Boolean =
       !df.groupBy("doc_id")
-        .agg(sum(length(col("response")).divide(3.6875)).as("tok"))
+        .agg(sum(length(col("response")).divide(TokenRatio)).as("tok"))
         .filter(col("tok") > cfg.collapseBudget)
         .isEmpty
 

@@ -103,6 +103,21 @@ class PlanSpec extends SparkTestBase {
     assert(p.contains("BroadcastHashJoin"), p.take(2000))
   }
 
+  test("p01: bypass keeps the inference edge visible to plan tooling") {
+    // InferOps.complete checkpoints its result, so the memoized plan reads
+    // the model's replies from a checkpoint scan; under bypass (PlanSpec,
+    // HofBanSpec, ExplainDump raw) the mapPartitions call must still show.
+    // The call visible in p01's plan is REDUCE's: MAP and COLLAPSE sit
+    // below IterativeStage's lineage cut.
+    val raw = graft.operators.ResultMemo.bypass(
+      SparkEntry.queries("p01_v1_qa_pipeline")(spark, dir))
+      .queryExecution.executedPlan.toString()
+    assert(raw.contains("MapPartitions") && raw.contains("REDUCE|"),
+      raw.take(3000))
+    val memo = plan("p01_v1_qa_pipeline")
+    assert(!memo.contains("MapPartitions"), memo.take(3000))
+  }
+
   test("d03: minhash signatures compute scan-side (no shuffle before bands)") {
     // bypass the result memo: this must assert the REAL plan, not the
     // checkpoint scan a memoized build returns

@@ -1,8 +1,8 @@
 package graft.infer
 
-import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkTestBase
 
-class InferenceSpec extends AnyFunSuite {
+class InferenceSpec extends SparkTestBase {
 
   test("HalvingClient halves content until the call succeeds (digest_module.py:117-131)") {
     var seen = List.empty[Int]
@@ -34,5 +34,24 @@ class InferenceSpec extends AnyFunSuite {
     val p = "SUGGEST|outline|digest text"
     assert(m.complete(p) == m.complete(p))
     assert(m.complete("EVAL|abc") == m.complete("EVAL|abc"))
+  }
+
+  test("complete calls the model once per row across two actions (A11)") {
+    import spark.implicits._
+    RecordingClient.prompts.clear()
+    val metrics = InferOps.TokenMetrics(spark)
+    val docs = (1 to 20).map(i => (i.toLong, s"MAP|q|chunk $i ANSWER[x$i]"))
+      .toDF("id", "prompt")
+    val replied = InferOps.complete(docs, "prompt", "reply",
+      new RecordingClient, batchSize = 4, metrics = Some(metrics))
+    // two actions over one frame: the second reads the rows the first
+    // materialized instead of asking the model again
+    assert(replied.count() == 20)
+    assert(replied.collect().length == 20)
+    assert(RecordingClient.prompts.size == 20,
+      s"expected one client call per row, got ${RecordingClient.prompts.size}")
+    assert(metrics.calls.value == 20)
+    assert(metrics.promptTokens.value > 0)
+    assert(metrics.completionTokens.value > 0)
   }
 }

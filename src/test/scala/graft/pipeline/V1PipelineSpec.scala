@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.SparkTestBase
-import graft.infer.{MockInference, RetryingClient, InferenceClient}
+import graft.infer.{InferenceClient, MockInference, RecordingClient, RetryingClient}
 
 /** End-to-end V1 pipeline on mock inference: a passkey planted deep in a
   * long synthetic document must surface through chunk → map → filter →
@@ -107,6 +107,37 @@ class V1PipelineSpec extends SparkTestBase {
     Seq("map", "filter", "reduce").foreach { st =>
       assert(spark.read.json(s"$dir/$st").count() > 0, s"stage $st missing")
     }
+  }
+
+  test("audit on or off, every stage calls the model once per row") {
+    import spark.implicits._
+    // six surviving chunks and a tight budget: MAP, COLLAPSE and REDUCE
+    // all run
+    val text = (0 until 60).map { i =>
+      if (i % 10 == 0) s"para $i has ANSWER[gold-555] inside this line."
+      else s"para $i is only filler noise without any signal."
+    }.mkString("\n")
+    val docs = Seq(("ca", "What is the passkey?", text))
+      .toDF("doc_id", "question", "text")
+    def callsPerPrefix(auditDir: Option[String]): Map[String, Int] = {
+      RecordingClient.prompts.clear()
+      val out = V1Pipeline.run(docs, new RecordingClient,
+        V1Pipeline.Config(chunkBudget = 16, collapseBudget = 40,
+          binBudget = 30, maxCollapseIters = 4), auditDir).collect()
+      assert(out.length == 1 && out.head.getString(1) == "gold-555")
+      RecordingClient.callsPerPrefix()
+    }
+    val off = callsPerPrefix(None)
+    val dir = java.nio.file.Files.createTempDirectory("graft_audit_calls_")
+    val on = callsPerPrefix(Some(dir.toString))
+    assert(Set("MAP", "COLLAPSE", "REDUCE").subsetOf(off.keySet), off)
+    // the audit writes read the rows the answer is computed from: they add
+    // no model call
+    assert(on == off, s"audit on $on vs audit off $off")
+    // MAP prompts are distinct chunks: one call per chunk
+    val map = RecordingClient.logged.filter(_.startsWith("MAP|"))
+    assert(on("MAP") == map.distinct.length)
+    assert(on("REDUCE") == 1)
   }
 
   test("retrying client recovers from transient failures") {

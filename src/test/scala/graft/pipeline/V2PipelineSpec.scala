@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.SparkTestBase
-import graft.infer.MockInference
+import graft.infer.{MockInference, RecordingClient}
 import org.apache.spark.sql.functions._
 
 /** End-to-end V2 survey pipeline on mock inference: 2 surveys × 3 papers
@@ -79,26 +79,29 @@ class V2PipelineSpec extends SparkTestBase {
   }
 
   test("refine loop skips re-digest when heading structure is unchanged") {
-    V2PipelineSpec.digestCalls.set(0)
+    RecordingClient.prompts.clear()
     val out = V2Pipeline.run(fixture, new V2PipelineSpec.CountingMock(false),
       V2Pipeline.Config(nGroups = 2, blockCount = 1))
     out.collect()
+    val calls = RecordingClient.callsPerPrefix()
     // 5 papers; the mock's MODIFY refines prose only (no heading change),
     // so the post-refine digest pass must be skipped: exactly one DIGEST
     // call per paper for the whole run
-    assert(V2PipelineSpec.digestCalls.get() == 5,
-      s"expected 5 DIGEST calls (one pass), got ${V2PipelineSpec.digestCalls.get()}")
+    assert(calls("DIGEST") == 5, s"expected 5 DIGEST calls (one pass), got $calls")
+    // every stage asks the model once per row: no prompt is sent twice
+    V2PipelineSpec.assertOncePerPrompt(surveys = 2, layers = 2)
   }
 
   test("refine loop re-digests surveys whose heading structure changes") {
-    V2PipelineSpec.digestCalls.set(0)
+    RecordingClient.prompts.clear()
     val out = V2Pipeline.run(fixture, new V2PipelineSpec.CountingMock(true),
       V2Pipeline.Config(nGroups = 2, blockCount = 1))
     out.collect()
+    val calls = RecordingClient.callsPerPrefix()
     // s1 (3 papers) gets a heading change on MODIFY and re-digests; s2
     // (2 papers) keeps its first-pass digests: 5 + 3
-    assert(V2PipelineSpec.digestCalls.get() == 8,
-      s"expected 5+3 DIGEST calls, got ${V2PipelineSpec.digestCalls.get()}")
+    assert(calls("DIGEST") == 8, s"expected 5+3 DIGEST calls, got $calls")
+    V2PipelineSpec.assertOncePerPrompt(surveys = 2, layers = 2)
   }
 
   test("fused refine loop matches the unfused per-layer dataflow") {
@@ -140,24 +143,29 @@ class V2PipelineSpec extends SparkTestBase {
 }
 
 object V2PipelineSpec {
-  /** JVM-static DIGEST-call counter: task closures deserialize into the
-    * same local JVM, so a static survives where an instance field's
-    * increments would land on per-task copies. */
-  val digestCalls = new java.util.concurrent.atomic.AtomicInteger(0)
+  import org.scalatest.Assertions._
 
-  /** Mock wrapper counting DIGEST calls; with `mutateHeading` it also turns
-    * s1's MODIFY into a structural (heading) edit so the selective
-    * re-digest path is exercised. */
-  final class CountingMock(mutateHeading: Boolean)
-    extends graft.infer.InferenceClient {
-    private val mock = new MockInference
-    override def complete(p: String): String = {
-      if (p.startsWith("DIGEST|")) digestCalls.incrementAndGet()
-      val r = mock.complete(p)
+  /** Calls == distinct prompts for every prefix but MERGE. The fused
+    * convolution replay may draw the same kernel sample in two layers and
+    * so send one MERGE prompt twice on purpose; there the count is one call
+    * per survey and layer. */
+  def assertOncePerPrompt(surveys: Int, layers: Int): Unit =
+    RecordingClient.logged.groupBy(_.takeWhile(_ != '|')).foreach {
+      case ("MERGE", ps) =>
+        assert(ps.size == surveys * layers,
+          s"MERGE: ${ps.size} calls for $surveys surveys x $layers layers")
+      case (prefix, ps) =>
+        assert(ps.size == ps.distinct.size,
+          s"$prefix: ${ps.size} calls for ${ps.distinct.size} distinct prompts")
+    }
+
+  /** With `mutateHeading`, turns s1's MODIFY into a structural (heading)
+    * edit so the selective re-digest path is exercised. */
+  final class CountingMock(mutateHeading: Boolean) extends RecordingClient {
+    override protected def reply(p: String, r: String): String =
       if (mutateHeading && p.startsWith("MODIFY|") &&
           p.contains("Stream Processing"))
         r.replaceFirst("# Conclusion", "# Closing Remarks")
       else r
-    }
   }
 }
